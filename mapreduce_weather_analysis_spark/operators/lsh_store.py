@@ -60,9 +60,9 @@ def lsh_index_path(sf_dir: str) -> str:
 
 def lsh_write(spark: SparkSession, sf_dir: str, docs: DataFrame) -> str:
     """Sign the corpus once and persist band buckets + verification
-    payload. Marker-idempotent; the build is the codegen relational
-    signature path (hash each shingle once, partial+final MIN aggregate),
-    never the interpreted higher-order-array form."""
+    payload. Marker-idempotent; signatures come from the zero-shuffle
+    ``mapInPandas`` kernel (:func:`operators.dedup.minhash_signatures_kernel`),
+    the same one the batch LSH chain uses."""
     path = lsh_index_path(sf_dir)
     marker = os.path.join(path, "_INDEX_COMPLETE")
     if os.path.exists(marker):

@@ -146,7 +146,12 @@ def run_available_now(
     agg: DataFrame, spark: SparkSession, mode: str = "complete"
 ) -> DataFrame:
     """Drain the bounded stream through a memory sink and return the
-    materialized result."""
+    materialized result.
+
+    The sink registers a ``stream_out_*`` temp view in the caller's
+    session. The result is resolved from it and the view dropped before
+    returning, so repeated calls leave no tables behind: the resolved
+    plan holds the sink's rows, not the view name."""
     import time
 
     t0 = time.perf_counter()
@@ -162,7 +167,9 @@ def run_available_now(
     q.awaitTermination()
     t2 = time.perf_counter()
     DRAIN_TIMINGS.append({"setup_s": t1 - t0, "drain_s": t2 - t1})
-    return spark.table(name)
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 def run_available_now_files(agg: DataFrame, spark: SparkSession) -> DataFrame:

@@ -37,26 +37,6 @@ def test_contract_shape():
     assert len(q) >= 3
 
 
-def test_priority_subset_of_registry():
-    """Every _PRIORITY name must be registered (no Spark session needed).
-
-    Round-6 regression guard: a ghost name in _PRIORITY makes
-    _ordered_specs() raise, which takes down queries()/oracle_sql()/entry()
-    and zeroes the driver's correctness artifact. This is the cheap,
-    import-only invariant check — run it after EVERY registry.py edit.
-    """
-    from mapreduce_weather_analysis_spark.plans.registry import (
-        _PRIORITY,
-        _import_plans,
-    )
-
-    _import_plans()
-    missing = sorted(set(_PRIORITY) - set(REGISTRY))
-    assert not missing, f"_PRIORITY names not registered: {missing}"
-    dupes = [n for n in _PRIORITY if _PRIORITY.count(n) > 1]
-    assert not dupes, f"duplicate _PRIORITY names: {sorted(set(dupes))}"
-
-
 def test_registry_docs_fully_formatted():
     """No driver-visible query doc may carry an unsubstituted {PLACEHOLDER}
     — module-level __doc__.format(...) runs after @register copies the
@@ -75,32 +55,69 @@ def test_registry_docs_fully_formatted():
     assert not offenders, f"unformatted doc placeholders: {offenders}"
 
 
-def test_priority_sections_cover_registry_exactly():
-    """Window accounting as code, not comments (VERDICT r7 asks #2/#10):
-    the concatenated staleness sections must cover every registered name
-    exactly once, and the never-driver-certified sections must fit
-    entirely inside the driver's verification window so each new query
-    gets an official row on its first rotation."""
+def _write_records(root, rounds: dict[int, dict[str, dict]]) -> None:
+    import json
+
+    for rnd, rows in rounds.items():
+        (root / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps(rows))
+
+
+def _row(ok: bool = True, err: str | None = None) -> dict:
+    return {"rows_match": True, "schema_match": True, "hash_match": ok, "err": err}
+
+
+def test_rotation_covers_registry_exactly():
+    """The driver order (computed from the committed CORRECTNESS records)
+    emits every registered name exactly once, and the oracle map follows
+    the same order."""
     from mapreduce_weather_analysis_spark.plans.registry import (
-        _PRIORITY,
-        _R8_GREEN_A,
-        _R8_GREEN_B,
-        _R14_QUEUE,
-        _WINDOW,
-        _import_plans,
+        all_oracles,
+        all_queries,
     )
 
-    _import_plans()
-    assert len(_PRIORITY) == len(set(_PRIORITY)) == len(REGISTRY)
-    assert set(_PRIORITY) == set(REGISTRY)
-    # the round-14 window leads with the never-certified _R14_QUEUE,
-    # then ALL 43 r8-dated greens — the whole remaining re-certification
-    # backlog (VERDICT r13 ask #1) — with the stalest r9 heads filling
-    # the remaining slots
-    head = _R14_QUEUE + _R8_GREEN_A + _R8_GREEN_B
-    assert len(_R8_GREEN_A) + len(_R8_GREEN_B) == 43
-    assert len(head) <= _WINDOW
-    assert _PRIORITY[: len(head)] == head
+    names = list(all_queries())
+    assert len(names) == len(set(names)) == len(REGISTRY)
+    assert set(names) == set(REGISTRY)
+    assert list(all_oracles()) == [n for n in names if REGISTRY[n].oracle]
+
+
+def test_rotation_uncertified_and_failed_lead(tmp_path):
+    """No row, or a failed latest row, sorts before every green row; a
+    green name sorts by the round of its latest row."""
+    from mapreduce_weather_analysis_spark.plans.registry import rotation_order
+
+    _write_records(
+        tmp_path,
+        {
+            3: {"a_old": _row(), "b_fixed": _row(ok=False), "c_broke": _row()},
+            7: {"b_fixed": _row(), "c_broke": _row(err="TypeError")},
+            9: {"d_new": _row(), "e_mismatch": _row(ok=False)},
+        },
+    )
+    order = rotation_order(
+        ["d_new", "c_broke", "b_fixed", "a_old", "z_never", "e_mismatch"],
+        tmp_path,
+    )
+    assert order == ["c_broke", "e_mismatch", "z_never", "a_old", "b_fixed", "d_new"]
+
+
+def test_rotation_ties_sort_by_name(tmp_path):
+    """Equal keys sort by name, and with no records at all every key is 0,
+    so the order is plain name order."""
+    from mapreduce_weather_analysis_spark.plans.registry import rotation_order
+
+    assert rotation_order(["q_b", "q_c", "q_a"], tmp_path) == ["q_a", "q_b", "q_c"]
+    _write_records(tmp_path, {5: {n: _row() for n in ("q_c", "q_a", "q_b")}})
+    assert rotation_order(["q_c", "q_b", "q_a"], tmp_path) == ["q_a", "q_b", "q_c"]
+
+
+def test_rotation_ignores_unregistered_names(tmp_path):
+    """A name in the records that is no longer registered neither raises
+    nor appears in the order (a ghost name once took down entry())."""
+    from mapreduce_weather_analysis_spark.plans.registry import rotation_order
+
+    _write_records(tmp_path, {4: {"q_gone": _row(), "q_kept": _row()}})
+    assert rotation_order(["q_new", "q_kept"], tmp_path) == ["q_new", "q_kept"]
 
 
 def test_no_oracle_is_vacuously_empty():

@@ -33,6 +33,19 @@ def test_stream_equals_batch_twin(spark):
     assert stream == batch
 
 
+def test_memory_sink_leaves_no_table(spark):
+    """A memory-sink drain must not leave its ``stream_out_*`` view in the
+    caller's session, and the returned result must still evaluate after
+    the view is gone."""
+    df = REGISTRY["q_stream_tumbling"].fn(spark, SMOKE_SF)
+    assert df.count() > 0
+    assert df.agg(F.sum("n_events")).first()[0] > 0
+    leaked = [
+        t.name for t in spark.catalog.listTables() if t.name.startswith("stream_out_")
+    ]
+    assert leaked == []
+
+
 def test_watermark_drops_late_data(spark, tmp_path):
     """Append-mode tumbling window with a 10-min watermark over a file
     stream: an event arriving after its window passed the watermark must
